@@ -13,7 +13,10 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+from collections import OrderedDict
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from city_payroll_data_pipeline_spark.operators import reports
@@ -33,6 +36,28 @@ RAW_COLUMNS = {
     "education": EDUCATION_RAW_COLUMNS,
     "hospital": HOSPITAL_RAW_COLUMNS,
 }
+
+#: Most budget reports :meth:`Engine.budget_report_table` keeps. A report
+#: is one row per distinct job_title (a few KB), so a full cache is a
+#: few MB of driver memory.
+REPORT_CACHE_SIZE = 1024
+
+
+def _version_token(path: str) -> tuple | None:
+    """On-disk version of a parquet table directory: the sorted
+    ``(name, size, mtime_ns)`` of its entries, from one ``os.scandir``.
+    Every Spark overwrite writes new UUID-named part files, so a
+    re-ingest always changes the token. None when the directory is
+    missing or changes under the scan (an overwrite in progress)."""
+    try:
+        with os.scandir(path) as entries:
+            return tuple(sorted(
+                (e.name, st.st_size, st.st_mtime_ns)
+                for e in entries
+                for st in (e.stat(),)
+            ))
+    except FileNotFoundError:
+        return None
 
 
 def _assert_plain_query(session: SparkSession, query: str) -> None:
@@ -84,6 +109,9 @@ class Engine:
     def __init__(self, spark: SparkSession, storage_root: str):
         self.spark = spark
         self.registry = TenantRegistry(storage_root)
+        # fact table path -> (version token, budget report), LRU order
+        self._reports: OrderedDict[str, tuple[tuple, pa.Table]] = OrderedDict()
+        self._reports_lock = threading.Lock()
 
     # -- ingest + transform (§3.1) ------------------------------------
 
@@ -127,13 +155,56 @@ class Engine:
         return clean
 
     # -- serving (§3.2 / §3.3) ----------------------------------------
+    #
+    # The DataFrame methods (fact_table, budget_report, full_export,
+    # sql) return lazy plans; every action on them runs Spark.
+    # budget_report_table is the repeat-read path the Flight service
+    # uses for reports: it keeps each report as an Arrow table keyed on
+    # the fact table's on-disk version token, so a dashboard asking for
+    # the same report again costs one authentication and one scandir,
+    # and a re-ingest of the upload invalidates the entry by itself.
+
+    def _fact_path(self, client_id: str, industry: str, upload_basename: str) -> str:
+        clean = self.registry.clean_path(client_id, upload_basename)
+        return os.path.join(clean, f"fct_{industry}")
 
     def fact_table(self, client_id: str, password: str, upload_basename: str) -> DataFrame:
         tenant = self.registry.authenticate(client_id, password)
-        clean = self.registry.clean_path(client_id, upload_basename)
         return self.spark.read.parquet(
-            os.path.join(clean, f"fct_{tenant.industry}")
+            self._fact_path(client_id, tenant.industry, upload_basename)
         )
+
+    def budget_report_table(self, client_id: str, password: str,
+                            upload_basename: str) -> pa.Table:
+        """The budget report of one upload as an Arrow table, served
+        from memory while the fact table on disk is unchanged.
+
+        A hit needs the cached version token to equal the current one
+        (:func:`_version_token`). A miss runs the ``budget_report``
+        plan with ``toArrow()`` — the result is bounded by the number
+        of distinct job titles — and stores it only if the token was
+        the same before and after the query, so a report read during
+        an overwrite is never cached. Spark runs outside the lock: two
+        concurrent first misses both compute, and the later store
+        wins. A missing fact table raises Spark's AnalysisException,
+        as :meth:`budget_report` does."""
+        tenant = self.registry.authenticate(client_id, password)
+        path = self._fact_path(client_id, tenant.industry, upload_basename)
+        token = _version_token(path)
+        with self._reports_lock:
+            cached = self._reports.get(path)
+            # stored tokens are never None, so a missing table never hits
+            if cached is not None and cached[0] == token:
+                self._reports.move_to_end(path)
+                return cached[1]
+        table = reports.budget_report(self.spark.read.parquet(path)).toArrow()
+        if token is not None and _version_token(path) == token:
+            with self._reports_lock:
+                self._reports[path] = (token, table)
+                self._reports.move_to_end(path)
+                while len(self._reports) > REPORT_CACHE_SIZE:
+                    self._reports.popitem(last=False)
+        return table
 
     def budget_report(self, client_id: str, password: str, upload_basename: str,
                       save_copy: bool = False) -> DataFrame:

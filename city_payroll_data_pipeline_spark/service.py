@@ -6,9 +6,14 @@ serve_flight.py:21 ``class BusinessSolutionServer(flight.FlightServerBase)``):
 the two report queries (serve_flight.py:234,291,295), and ``do_action``
 lists tenant files (serve_flight.py:337). This module reproduces that
 wire surface as a THIN adapter over :class:`engine.Engine` — transport
-only; every query executes in Spark, and results stream back as Arrow
-record batches read sequentially from an executor-written parquet
-spool (columnar end to end, driver holds at most one batch).
+only; every query executes in Spark. Budget reports come from
+:meth:`engine.Engine.budget_report_table`: an in-memory Arrow table per
+upload, recomputed only when the fact table's on-disk version token (the
+sorted name/size/mtime of its files) changes, so a repeat report runs no
+Spark job and a re-ingest invalidates it. Full exports are unbounded and
+stream back as Arrow record batches read sequentially from an
+executor-written parquet spool (columnar end to end, driver holds at
+most one batch).
 
 Scale note: Flight is a single-node ingress/egress door, fine for
 reports (small) and per-tenant uploads (bounded). Bulk data belongs on
@@ -41,7 +46,15 @@ def egress_batches(df):
     Returns ``(schema, batch_iterator)``. The spool directory is
     deleted when the iterator is exhausted or closed; an atexit hook
     is the fallback for streams a client abandons mid-flight (the
-    generator's ``finally`` never runs then — ADVICE r4)."""
+    generator's ``finally`` never runs then — ADVICE r4).
+
+    Each spool write also makes the JVM fork short-lived child
+    processes: without Hadoop's native library, ``RawLocalFileSystem``
+    sets permissions by shelling out, e.g. ``chmod 0644
+    …/flight_egress_*/result/_SUCCESS`` and ``chmod 0755`` on the
+    committer's ``_temporary`` directories. Budget reports no longer
+    come through here (``Engine.budget_report_table``); exports still
+    do."""
     import atexit
     import glob
     import shutil
@@ -110,13 +123,13 @@ class PayrollFlightServer(flight.FlightServerBase):
         filename = os.path.basename(meta["filename"])
 
         table = reader.read_all()  # bulk transfer, like reference :148
-        tenant = self.engine.registry.authenticate(client_id, password)
+        # both gates run before the raw file is written
+        self.engine.registry.authenticate(client_id, password)
         self.engine.registry.validate_filename(client_id, filename)
         raw_dir = self.engine.registry.storage_path(client_id, "Raw")
         os.makedirs(raw_dir, exist_ok=True)
         raw_path = os.path.join(raw_dir, filename)
         table.to_pandas().to_csv(raw_path, index=False)
-        del tenant
         self.engine.ingest(client_id, password, raw_path)
 
     # -- reports (reference serve_flight.py:234-330) ------------------
@@ -128,8 +141,11 @@ class PayrollFlightServer(flight.FlightServerBase):
         target = req["target_file"]
         try:
             if action == "get_budget_report":
-                df = self.engine.budget_report(client_id, password, target)
-            elif action == "get_full_clean":
+                # bounded and cached: no Spark job on a repeat request
+                return flight.RecordBatchStream(
+                    self.engine.budget_report_table(client_id, password, target)
+                )
+            if action == "get_full_clean":
                 df = self.engine.full_export(client_id, password, target)
             else:
                 raise flight.FlightServerError(f"unknown action: {action}")

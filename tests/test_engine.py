@@ -86,6 +86,77 @@ def test_kpi_stats_layer(engine, corporate_csv):
     assert top_k(rpt, 1).collect()[0]["job_title"] == "Captain"
 
 
+def test_budget_report_table_matches_dataframe(engine, corporate_csv):
+    """The cached report is the DataFrame report row for row, in order,
+    with the Arrow schema the parquet egress spool yields for it (field
+    names, types, nullability; the spool's Spark footer metadata aside)."""
+    import pyarrow as pa
+
+    from city_payroll_data_pipeline_spark.service import egress_batches
+
+    df = engine.budget_report("ACME", "secret", corporate_csv)
+    schema, batches = egress_batches(df)
+    spooled = pa.Table.from_batches(list(batches), schema=schema)
+
+    table = engine.budget_report_table("ACME", "secret", corporate_csv)
+    assert table.schema.equals(schema)
+    assert table.to_pylist() == [r.asDict() for r in df.collect()]
+    assert table.equals(spooled)
+    # a repeat is served from the cache
+    assert engine.budget_report_table("ACME", "secret", corporate_csv) is table
+
+
+def _report_jobs(spark, group, fn):
+    """Spark job ids ``fn()`` ran, counted in its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_budget_report_runs_no_spark_jobs(engine, corporate_csv, spark):
+    from city_payroll_data_pipeline_spark.engine import Engine
+
+    # a fresh Engine over the same storage starts with an empty cache,
+    # so its first report runs Spark: the job count sees real work
+    cold = Engine(spark, engine.registry.root)
+    assert _report_jobs(
+        spark, "cold-report",
+        lambda: cold.budget_report_table("ACME", "secret", corporate_csv),
+    )
+    assert _report_jobs(
+        spark, "repeat-report",
+        lambda: cold.budget_report_table("ACME", "secret", corporate_csv),
+    ) == []
+
+
+def test_budget_report_table_tenant_isolation(engine, corporate_csv, tmp_path):
+    """Another tenant asking for the same basename never sees the first
+    tenant's cached report."""
+    from pyspark.errors import AnalysisException
+
+    from city_payroll_data_pipeline_spark.schemas import CORPORATE_RAW_COLUMNS
+
+    acme = engine.budget_report_table("ACME", "secret", corporate_csv)
+    engine.registry.register("BETA", "corporate", "beta-pw")
+    with pytest.raises(AnalysisException):
+        engine.budget_report_table("BETA", "beta-pw", corporate_csv)
+
+    path = tmp_path / "corporate_payroll_2013.csv"  # ACME's basename
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(CORPORATE_RAW_COLUMNS)
+        w.writerow(["9", "2013", "Parks", "Ranger", "FT", "$50.00", "", "", ""])
+    engine.ingest("BETA", "beta-pw", str(path), processed_at="2024-06-01T00:00:00")
+    beta = engine.budget_report_table("BETA", "beta-pw", str(path))
+    assert beta.column("job_title").to_pylist() == ["Ranger"]
+    assert engine.budget_report_table("ACME", "secret", corporate_csv).equals(acme)
+
+
 def test_compact_parquet_small_files(spark, tmp_path):
     """Compaction rewrites many small files into few, preserving rows;
     the temp/backup dirs are cleaned up."""

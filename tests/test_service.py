@@ -64,6 +64,69 @@ def test_flight_rejects_bad_credentials(flight_setup):
         client.get_budget_report("ACME", "wrong", "corporate_payroll.csv")
 
 
+def _write_corporate_csv(path, rows):
+    from city_payroll_data_pipeline_spark.schemas import CORPORATE_RAW_COLUMNS
+
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(CORPORATE_RAW_COLUMNS)
+        for i, (title, base) in enumerate(rows):
+            w.writerow([str(i), "2024", "Dept", title, "FT",
+                        f"${base}.00", "$0.00", "$0.00", "$0.00"])
+
+
+def test_flight_report_reupload_invalidates_cache(flight_setup):
+    """Re-uploading the same filename with new contents changes the
+    next report: the cached report is keyed on the fact table's files."""
+    _, _, client, csv_dir = flight_setup
+    path = csv_dir / "corporate_reupload.csv"
+    _write_corporate_csv(path, [("Clerk", 100), ("Clerk", 50)])
+    client.upload_csv(str(path), "ACME", "s3cret")
+    first = client.get_budget_report("ACME", "s3cret", path.name)
+    assert client.get_budget_report("ACME", "s3cret", path.name).equals(first)
+    assert list(first["job_title"]) == ["Clerk"]
+
+    _write_corporate_csv(path, [("Judge", 900), ("Clerk", 10)])
+    client.upload_csv(str(path), "ACME", "s3cret")
+    second = client.get_budget_report("ACME", "s3cret", path.name)
+    assert list(second["job_title"]) == ["Judge", "Clerk"]
+    assert list(second["total_budget"]) == pytest.approx([900.0, 10.0])
+
+
+def test_flight_cached_report_still_authenticates(flight_setup):
+    """A wrong password never reaches the cache, even for an upload
+    whose report is already cached."""
+    import pyarrow.flight as flight
+
+    _, _, client, csv_dir = flight_setup
+    path = csv_dir / "corporate_authcheck.csv"
+    _write_corporate_csv(path, [("Clerk", 100)])
+    client.upload_csv(str(path), "ACME", "s3cret")
+    client.get_budget_report("ACME", "s3cret", path.name)  # now cached
+    with pytest.raises(flight.FlightUnauthenticatedError):
+        client.get_budget_report("ACME", "wrong", path.name)
+
+
+def test_flight_report_missing_upload_not_found(flight_setup):
+    """An upload that was never processed, or whose fact table is gone
+    after its report was cached, maps to the friendly not-found error."""
+    import shutil
+
+    import pyarrow.flight as flight
+
+    engine, _, client, csv_dir = flight_setup
+    with pytest.raises(flight.FlightServerError, match="not processed yet"):
+        client.get_budget_report("ACME", "s3cret", "corporate_never.csv")
+
+    path = csv_dir / "corporate_dropped.csv"
+    _write_corporate_csv(path, [("Clerk", 100)])
+    client.upload_csv(str(path), "ACME", "s3cret")
+    client.get_budget_report("ACME", "s3cret", path.name)  # now cached
+    shutil.rmtree(engine.registry.clean_path("ACME", path.name))
+    with pytest.raises(flight.FlightServerError, match="not processed yet"):
+        client.get_budget_report("ACME", "s3cret", path.name)
+
+
 def test_flight_rejects_wrong_industry_filename(flight_setup):
     import pyarrow as pa
     import pyarrow.flight as flight
@@ -150,15 +213,19 @@ def test_egress_spool_cleaned_up_after_exhaustion(spark, tmp_path):
     """The spool directory dies with the iterator (prompt path) — the
     atexit hook is only the abandoned-stream fallback."""
     import glob
+    import os
+    import tempfile
 
     from city_payroll_data_pipeline_spark.service import egress_batches
 
-    before = set(glob.glob("/tmp/flight_egress_*"))
+    # the spool lives where tempfile.mkdtemp puts it, which follows TMPDIR
+    pattern = os.path.join(tempfile.gettempdir(), "flight_egress_*")
+    before = set(glob.glob(pattern))
     _, batches = egress_batches(spark.range(0, 100))
-    during = set(glob.glob("/tmp/flight_egress_*")) - before
+    during = set(glob.glob(pattern)) - before
     assert during  # spool exists while streaming
     list(batches)  # exhaust
-    assert not (set(glob.glob("/tmp/flight_egress_*")) - before)
+    assert not (set(glob.glob(pattern)) - before)
 
 
 def test_egress_atexit_registry_does_not_grow(spark):
